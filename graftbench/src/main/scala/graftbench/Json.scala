@@ -1,0 +1,20 @@
+package graftbench
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+
+import scala.jdk.CollectionConverters._
+
+/** JSON through Jackson and its Scala module (both on Spark's classpath):
+  * reading the generator's manifest, writing the results file. Values
+  * written are Scala maps, sequences, options, strings and finite numbers.
+  */
+object Json {
+  private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
+
+  def read(path: String): JsonNode = mapper.readTree(new java.io.File(path))
+
+  def elems(n: JsonNode): Seq[JsonNode] = n.elements().asScala.toSeq
+
+  def write(v: Any): String = mapper.writeValueAsString(v)
+}
