@@ -301,10 +301,13 @@ case class VecMinMaxAgg(child: Expression, dim: Int,
       val n = math.min(arr.numElements(), dim)
       var i = 0
       while (i < n) {
-        val x = if (isFloat) arr.getFloat(i)
-          else VectorExpressions.elementAt(arr, i, elem).toFloat
-        if (x < buf(i)) buf(i) = x
-        if (x > buf(dim + i)) buf(dim + i) = x
+        // null slots are skipped, as Spark's Min/Max skip null inputs
+        if (!arr.isNullAt(i)) {
+          val x = if (isFloat) arr.getFloat(i)
+            else VectorExpressions.elementAt(arr, i, elem).toFloat
+          if (x < buf(i)) buf(i) = x
+          if (x > buf(dim + i)) buf(dim + i) = x
+        }
         i += 1
       }
     }

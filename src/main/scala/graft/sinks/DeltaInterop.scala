@@ -11,6 +11,8 @@ import org.apache.spark.sql.types._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
+import Staging.fsFor
+
 /** Delta Lake WIRE-FORMAT interop, from scratch against the public
   * protocol (delta-io `PROTOCOL.md`) — no connector jar: the Delta log
   * is newline-delimited JSON actions plus parquet checkpoints, and the
@@ -150,9 +152,6 @@ object DeltaInterop {
   }
 
   // ---- log plumbing ----
-
-  private def fsFor(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def commitFile(path: String, v: Long): Path =
     new Path(s"$path/$LogDir/${"%020d".format(v)}.json")
@@ -798,11 +797,10 @@ object DeltaInterop {
     version
   }
 
-  /** Stage `df`'s files hive-style, move them into the table tree, and
-    * return their AddFile actions with `add.stats` from the staged
-    * footers ([[FileStats.fromFooters]]). Files are invisible until a commit
-    * referencing them publishes (the log is the source of truth); a
-    * failed commit leaves only unreferenced debris.
+  /** Stage `df`'s files hive-style ([[Staging]]) and return their
+    * AddFile actions with `add.stats` from the staged footers. Files are
+    * invisible until a commit referencing them publishes (the log is the
+    * source of truth); a failed commit leaves only unreferenced debris.
     */
   private def stageAdds(df: DataFrame, path: String,
       partitionBy: Seq[String], dataChange: Boolean = true,
@@ -816,76 +814,32 @@ object DeltaInterop {
     // into a small-file storm (delta-spark ships the same default as
     // optimized writes). OPTIMIZE passes shape=false: its frames
     // arrive pre-shaped (byte-targeted bins, z-order ranges) and a
-    // reshape here would undo exactly what it computed. Callers that
-    // deliberately range-cluster their input for write-time stats
-    // pruning opt out via `graft.write.shape=false` (session conf).
-    val confShape = spark.conf.getOption("graft.write.shape")
-      .forall(_.trim.toBoolean)
+    // reshape here would undo exactly what it computed.
     val shaped =
-      if (shape && confShape && partitionBy.nonEmpty)
-        VersionedTable.byPartitions(df, partitionBy)
+      if (shape && partitionBy.nonEmpty) VersionedTable.byPartitions(df, partitionBy)
       else df
-    val staged = stageFiles(shaped, path, partitionBy)
     val now = System.currentTimeMillis()
-    // one distributed pass over the commit's files → add.stats
-    // (numRecords + min/max/nullCount), the protocol's skipping columns
+    // add.stats (numRecords + min/max/nullCount), the protocol's
+    // skipping columns, from each staged file's footer
     val dataSchema = StructType(df.schema.filterNot(f => partitionBy.contains(f.name)))
-    val statsByFile =
-      FileStats.fromFooters(spark, staged.map(s => s"$path/${s._1}"), dataSchema)
+    val staged = Staging.write(shaped, path, s"$StageDir/", "delta: stage files",
+      dataSchema, partitionBy)((rel, _) => rel)
     // drop zero-row files before any log action references them: an
     // empty unpartitioned write still emits one parquet file, and a
     // zero-row add is protocol noise (schema lives in metaData, not in
     // data files). Lets callers stage-first and derive emptiness from
     // what actually landed instead of paying a pre-write probe action.
     val fs = fsFor(spark, path)
-    staged.flatMap { case (rel, size) =>
-      val st = statsByFile.get(FileStats.canon(s"$path/$rel"))
-      if (st.exists(_.numRecords.contains(0L))) {
-        fs.delete(new Path(s"$path/$rel"), false)
+    staged.flatMap { s =>
+      if (s.stat.numRecords.contains(0L)) {
+        fs.delete(new Path(s"$path/${s.dest}"), false)
         None
       } else Some(
-        AddFile(encodePath(rel), partitionValuesOf(rel, partitionBy), size, now,
+        AddFile(encodePath(s.dest), partitionValuesOf(s.dest, partitionBy), s.bytes, now,
           dataChange = dataChange,
-          stats = st.map(s => statsJson(s.numRecords.getOrElse(0L),
-            dataSchema.fields.toSeq.flatMap(f => s.cols.get(f.name).map(f -> _))))))
+          stats = Some(statsJson(s.stat.numRecords.getOrElse(0L),
+            dataSchema.fields.toSeq.flatMap(f => s.stat.cols.get(f.name).map(f -> _))))))
     }
-  }
-
-  /** Write `df`'s files hive-style into the table tree under `prefix`
-    * (empty for data files, `_change_data/` for CDC) and return their
-    * (relative path incl. prefix, size) pairs. Shared tail of
-    * [[stageAdds]] and [[stageCdc]].
-    */
-  private def stageFiles(df: DataFrame, path: String,
-      partitionBy: Seq[String], prefix: String = ""): Seq[(String, Long)] = {
-    val spark = df.sparkSession
-    val fs = fsFor(spark, path)
-    val stagePath = new Path(s"$path/$StageDir/${java.util.UUID.randomUUID}")
-    graft.JobLabel(spark, s"delta: stage files → $prefix") {
-      df.write.mode("overwrite").partitionBy(partitionBy: _*).parquet(stagePath.toString)
-    }
-    val staged = scala.collection.mutable.ArrayBuffer[(Path, String, Long)]()
-    def walk(d: Path): Unit = fs.listStatus(d).foreach { st =>
-      if (st.isDirectory) walk(st.getPath)
-      else if (st.getPath.getName.endsWith(".parquet")) {
-        val rel = fs.makeQualified(st.getPath).toString
-          .stripPrefix(fs.makeQualified(stagePath).toString + "/")
-        staged += ((st.getPath, prefix + rel, st.getLen))
-      }
-    }
-    walk(stagePath)
-    staged.map(s => new Path(s"$path/${s._2}").getParent).distinct
-      .foreach(d => fs.mkdirs(d))
-    staged.foreach { case (src, rel, _) =>
-      require(fs.rename(src, new Path(s"$path/$rel")), s"move failed: $rel") }
-    fs.delete(stagePath, true)
-    // clean the SHARED stage root only when empty: a blanket recursive
-    // delete would destroy a concurrent writer's mid-stage files and
-    // abort its commit (the per-writer UUID subdir above is ours alone)
-    val stageRoot = new Path(s"$path/$StageDir")
-    try if (fs.listStatus(stageRoot).isEmpty) fs.delete(stageRoot, false)
-    catch { case _: java.io.FileNotFoundException => }
-    staged.map(s => (s._2, s._3)).toSeq
   }
 
   /** Adopt data files that already exist OUTSIDE this table's tree as
@@ -1027,10 +981,12 @@ object DeltaInterop {
       // metric cannot serve here: AQE's empty-relation propagation
       // elides the CollectMetrics node when a full-partition delete
       // stages zero rows. Foreign adds without numRecords fall back to
-      // one probe.
+      // one probe. A touched file's live rows are its numRecords minus
+      // the rows its deletion vector already removed.
       val adds = stageAdds(frame.filter(!hit), path, partCols)
       val stagedRows = adds.map(a => fileStatOf(a, schema, partCols).numRecords)
-      val touchedRows = touched.map(a => fileStatOf(a, schema, partCols).numRecords)
+      val touchedRows = touched.map(a => fileStatOf(a, schema, partCols).numRecords
+        .map(_ - a.deletionVector.fold(0L)(_.cardinality)))
       val matchedNone =
         if (stagedRows.forall(_.isDefined) && touchedRows.forall(_.isDefined))
           touchedRows.flatten.sum == stagedRows.flatten.sum
@@ -1799,17 +1755,16 @@ object DeltaInterop {
     */
   private def stageCdc(changes: DataFrame, path: String,
       partCols: Seq[String]): Seq[JObject] =
-    stageFiles(
+    Staging.write(
       if (partCols.nonEmpty) VersionedTable.byPartitions(changes, partCols)
       else changes,
-      path, partCols, prefix = s"$CdcDir/").map {
-      case (rel, size) =>
-        JObject("cdc" -> JObject(
-          "path" -> JString(encodePath(rel)),
-          "partitionValues" -> pvJson(
-            partitionValuesOf(rel.stripPrefix(s"$CdcDir/"), partCols)),
-          "size" -> JLong(size),
-          "dataChange" -> JBool(false)))
+      path, s"$StageDir/", s"delta: stage files → $CdcDir/", StructType(Nil),
+      partCols)((rel, _) => s"$CdcDir/$rel").map { s =>
+      JObject("cdc" -> JObject(
+        "path" -> JString(encodePath(s.dest)),
+        "partitionValues" -> pvJson(partitionValuesOf(s.src, partCols)),
+        "size" -> JLong(s.bytes),
+        "dataChange" -> JBool(false)))
     }
 
   /** The change rows a DELETE/UPDATE commit must describe when the feed

@@ -178,7 +178,7 @@ object FileStats {
     } finally pool.shutdown()
   }
 
-  private def readFooterStats(conf: org.apache.hadoop.conf.Configuration,
+  private[sinks] def readFooterStats(conf: org.apache.hadoop.conf.Configuration,
       file: String, statCols: Seq[StructField]): FileStat = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile

@@ -5,9 +5,11 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StructType}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
+
+import Staging.fsFor
 
 /** Hudi copy-on-write WIRE-FORMAT interop, from scratch against the
   * public table layout — no hudi-spark bundle: a Hudi COW table is a
@@ -59,9 +61,6 @@ object HudiInterop {
     "_hoodie_record_key", "_hoodie_partition_path", "_hoodie_file_name")
 
   private implicit val formats: Formats = DefaultFormats
-
-  private def fsFor(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   // ---- timeline ----
 
@@ -875,38 +874,33 @@ object HudiInterop {
       // into every reader's schema, including metadata-only conversions)
       (MetaCols.map(col) ++ dataCols.map(col) :+ col("__dir") :+ col("__bucket")): _*)
 
-    // one writer per file group (dir × bucket), then rename each part
-    // file to its Hudi slice name
-    val stage = new Path(s"$path/$MetaDir/.stage-${java.util.UUID.randomUUID}")
-    ordered.repartition(col("__dir"), col("__bucket"))
-      .write.mode("overwrite").partitionBy("__dir", "__bucket").parquet(stage.toString)
-    val entries = scala.collection.mutable.ArrayBuffer[(String, String, String, Long)]()
-    fs.listStatus(stage).filter(_.isDirectory).foreach { dirStatus =>
-      val dirName = dirStatus.getPath.getName // __dir=<escaped>
+    // one writer per file group (dir × bucket), each part file renamed
+    // to its Hudi slice name
+    def groupOf(rel: String): (String, String) = {
+      val Array(dirSeg, bucketSeg, _) = rel.split("/")
       // %XX-only unescape: Spark's partition-dir escaping leaves '+'
       // literal, so URLDecoder would corrupt 'UTC+8' into 'UTC 8'
-      val raw = DeltaInterop.unescapeHiveDir(dirName.stripPrefix("__dir="))
+      val raw = DeltaInterop.unescapeHiveDir(dirSeg.stripPrefix("__dir="))
       val dir = if (raw == "__HIVE_DEFAULT_PARTITION__") "" else raw
+      (dir, fidByPair((dir, bucketSeg.stripPrefix("__bucket=").toInt)))
+    }
+    val entries = Staging.write(ordered.repartition(col("__dir"), col("__bucket")),
+        path, s"$MetaDir/.stage-", "hudi: stage slices", StructType(Nil),
+        Seq("__dir", "__bucket")) { (rel, i) =>
+      val (dir, fid) = groupOf(rel)
+      val name = s"${fid}_$i-0-0_$instant.parquet"
+      if (dir.isEmpty) name else s"$dir/$name"
+    }.map { s =>
+      val (dir, fid) = groupOf(s.src)
+      (dir, fid, s.dest, s.bytes)
+    }
+    entries.map(_._1).distinct.foreach { dir =>
       val destDir = if (dir.isEmpty) new Path(path) else new Path(s"$path/$dir")
-      fs.mkdirs(destDir)
       if (!fs.exists(new Path(destDir, PartitionMeta)))
         writeFile(fs, new Path(destDir, PartitionMeta),
           s"#partition metadata\ncommitTime=$instant\npartitionDepth=${partitionBy.size}\n")
-      fs.listStatus(dirStatus.getPath).filter(_.isDirectory).foreach { bStatus =>
-        val b = bStatus.getPath.getName.stripPrefix("__bucket=").toInt
-        val fid = fidByPair((dir, b))
-        val parts = fs.listStatus(bStatus.getPath)
-          .filter(_.getPath.getName.endsWith(".parquet"))
-        parts.zipWithIndex.foreach { case (p, i) =>
-          val name = s"${fid}_$i-0-0_$instant.parquet"
-          val dst = new Path(destDir, name)
-          require(fs.rename(p.getPath, dst), s"slice move failed: $dst")
-          entries += ((dir, fid, if (dir.isEmpty) name else s"$dir/$name", p.getLen))
-        }
-      }
     }
-    fs.delete(stage, true)
-    entries.toSeq
+    entries
   }
 
   /** Driver-checked round trip through the wire format: orders bulk-

@@ -11,6 +11,7 @@ import org.apache.spark.sql.types._
 
 import HudiInterop.{MetaCols, MetaDir, Slice}
 import HudiLogFormat.{AvroDataBlock, CommandBlock, DeleteBlock, LogBlock}
+import Staging.fsFor
 
 /** Hudi MERGE_ON_READ wire format: delta commits append AVRO/DELETE log
   * blocks ([[HudiLogFormat]]) beside the file group's base parquet, and
@@ -75,9 +76,6 @@ object HudiMor {
     */
   private final case class LogFile(dir: String, fileId: String,
       baseInstant: String, version: Int, rel: String)
-
-  private def fsFor(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def logFiles(fs: FileSystem, path: String): Seq[LogFile] = {
     val rootQ = fs.makeQualified(new Path(path)).toString
@@ -699,12 +697,14 @@ object HudiMor {
       .map { case (d, b) => (d, b) -> HudiInterop.routeGroup(groupsByDir, n, d, b) }
       .toMap
     // The routing probe doubles as the emptiness answer: an empty batch
-    // is a no-op (no extra isEmpty action per micro-batch), unless the
-    // table holds no completed commit to report — then refuse loudly.
+    // is a no-op returning the latest completed instant (no extra
+    // isEmpty action per micro-batch). A table with no completed commit
+    // yet gets an empty delta commit instead — Hudi's own default for
+    // an empty write — so a stream whose first micro-batch is empty
+    // still has an instant to report.
     if (routed.isEmpty) {
-      val last = completed(fs, path, None).toSeq.sorted.lastOption
-      require(last.isDefined, "HudiMor.upsert: empty batch into an empty table")
-      return last.get
+      val last = visible.toSeq.sorted.lastOption
+      if (last.isDefined) return last.get
     }
     // log-only groups (no committed base EVER) are READ-served but not
     // writable: bootstrapping a parallel base group would LOSE the

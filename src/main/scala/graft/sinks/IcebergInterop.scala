@@ -13,6 +13,8 @@ import org.apache.spark.sql.types._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
+import Staging.fsFor
+
 /** Iceberg v1 WIRE-FORMAT interop, from scratch against the public
   * table spec (iceberg.apache.org/spec) — no iceberg-spark runtime:
   * an Iceberg table is JSON table metadata (`metadata/vN.metadata.json`
@@ -46,9 +48,6 @@ import org.json4s.jackson.JsonMethods
 object IcebergInterop {
 
   private implicit val formats: Formats = DefaultFormats
-
-  private def fsFor(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def writeFile(fs: FileSystem, p: Path, body: Array[Byte]): Unit = {
     fs.mkdirs(p.getParent)
@@ -272,7 +271,7 @@ object IcebergInterop {
     ]}""".replace("\n", ""))
 
   private[sinks] final case class DataFileRef(path: String, records: Long, bytes: Long,
-      partValues: Seq[Option[String]] = Nil)
+      partValues: Seq[Option[String]] = Nil, stat: Option[FileStats.FileStat] = None)
 
   /** Manifest-list record with the v2 fields stamped. `addedSnapshotId`
     * is boxed because carried foreign records may hold null.
@@ -341,23 +340,18 @@ object IcebergInterop {
       ]}}
     ]}""".replace("\n", ""))
 
-  /** Stage `df`'s parquet files, then move them into `data/` under
-    * commit-unique names. NOT dot-prefixed staging: Spark's hidden-path
-    * filter would silently skip a ".stage" dir when reading it back for
-    * the per-file record counts. Partitioned tables stage under a
+  /** Stage `df`'s parquet files ([[Staging]]) into `data/` under
+    * commit-unique names, each carrying its footer stats over the table
+    * schema. NOT dot-prefixed staging: Spark's hidden-path filter would
+    * silently skip a ".stage" dir. Partitioned tables stage under a
     * SINGLE synthetic `__pdir` token (url-encoded values joined by
     * ','): only __pdir is dropped from the data files, so identity
     * source columns stay physically present — the layout the spec
     * expects from real writers.
     */
   private def stageDataFiles(df: DataFrame, path: String,
-      partitionBy: Seq[String], fs: FileSystem,
-      shape: Boolean = true): Seq[DataFileRef] = {
-    val spark = df.sparkSession
-    val stage = new Path(s"$path/metadata/stage-${java.util.UUID.randomUUID}")
-    if (partitionBy.isEmpty)
-      df.write.mode("overwrite").parquet(stage.toString)
-    else {
+      partitionBy: Seq[String], shape: Boolean = true): Seq[DataFileRef] = {
+    val staged = if (partitionBy.isEmpty) df else {
       val token = concat(lit("v"), concat_ws(",", partitionBy.map(c =>
         coalesce(url_encode(col(c).cast("string")), lit(NullToken))): _*))
       // one writer task per partition dir (same shape + tasksPerPartition
@@ -367,43 +361,34 @@ object IcebergInterop {
       // shape=false — its frames arrive pre-shaped (byte-targeted bins)
       // and a reshape would undo the binning.
       val tokened = df.withColumn("__pdir", token)
-      (if (shape) VersionedTable.byPartitions(tokened, Seq("__pdir")) else tokened)
-        .write.mode("overwrite").partitionBy("__pdir").parquet(stage.toString)
+      if (shape) VersionedTable.byPartitions(tokened, Seq("__pdir")) else tokened
     }
-    val stagedFiles: Seq[(org.apache.hadoop.fs.FileStatus, Seq[Option[String]])] =
-      if (partitionBy.isEmpty)
-        fs.listStatus(stage).toSeq.filter(_.getPath.getName.endsWith(".parquet"))
-          .map(st => (st, Nil))
-      else fs.listStatus(stage).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("__pdir="))
-        .flatMap { d =>
-          val values = decodeToken(
-            d.getPath.getName.stripPrefix("__pdir="), partitionBy.size)
-          fs.listStatus(d.getPath).toSeq
-            .filter(_.getPath.getName.endsWith(".parquet")).map((_, values))
-        }
-    // record counts from the parquet FOOTERS the writer just produced
-    // (KBs per file on an IO thread pool) — a distributed re-scan of the
-    // staged bytes would read every commit's data a SECOND time
-    val counts = FileStats.fromFooters(spark,
-      stagedFiles.map(_._1.getPath.toString), StructType(Nil))
-      .map { case (p, st) => p -> st.numRecords.getOrElse(0L) }
-    val moved = stagedFiles.zipWithIndex.map { case ((st, values), i) =>
+    def valuesOf(rel: String): Seq[Option[String]] =
+      if (partitionBy.isEmpty) Nil
+      else decodeToken(rel.takeWhile(_ != '/').stripPrefix("__pdir="), partitionBy.size)
+    Staging.write(staged, path, "metadata/stage-", "iceberg: stage data files",
+      df.schema, if (partitionBy.isEmpty) Nil else Seq("__pdir")) { (rel, i) =>
       val name = f"00000-$i%05d-${java.util.UUID.randomUUID()}.parquet"
       // cosmetic hive-ish dir per partition tuple (readers use manifests)
-      val subdir = partitionBy.zip(values).map { case (c, v) =>
+      val subdir = partitionBy.zip(valuesOf(rel)).map { case (c, v) =>
         s"$c=${v.map(java.net.URLEncoder.encode(_, "UTF-8")).getOrElse("null")}"
       }.mkString("/")
-      val dir = if (subdir.isEmpty) s"$path/data" else s"$path/data/$subdir"
-      val dst = new Path(s"$dir/$name")
-      fs.mkdirs(dst.getParent)
-      require(fs.rename(st.getPath, dst), s"move failed: $dst")
-      DataFileRef(s"$dir/$name",
-        counts.getOrElse(FileStats.canon(st.getPath.toString), 0L), st.getLen,
-        values)
-    }
-    fs.delete(stage, true)
-    moved
+      if (subdir.isEmpty) s"data/$name" else s"data/$subdir/$name"
+    }.map(s => DataFileRef(s"$path/${s.dest}", s.stat.numRecords.getOrElse(0L),
+      s.bytes, valuesOf(s.src), Some(s.stat)))
+  }
+
+  /** Stage `rows` as ONE sorted delete parquet (`coalesce(1)` upstream)
+    * at `data/<kind>-<uuid>.parquet`; returns its table path and footer
+    * row count.
+    */
+  private def stageDeleteFile(rows: DataFrame, path: String, stagePrefix: String,
+      kind: String): (String, Long) = {
+    val staged = Staging.write(rows, path, stagePrefix, s"iceberg: stage $kind file",
+      StructType(Nil))((_, _) => s"data/$kind-${java.util.UUID.randomUUID()}.parquet")
+    val f = staged.headOption.getOrElse(
+      throw new IllegalStateException(s"$kind write produced no file"))
+    (s"$path/${f.dest}", f.stat.numRecords.getOrElse(0L))
   }
 
   // ---- identity partitioning plumbing ----
@@ -660,8 +645,8 @@ object IcebergInterop {
           return (meta \ "current-snapshot-id").extract[Long]
       }
     }
-    val moved = stageDataFiles(df, path, partitionBy, fs)
-    commitRefs(spark, fs, path, df.schema, moved, overwrite, txn, partFields,
+    val moved = stageDataFiles(df, path, partitionBy)
+    commitRefs(fs, path, df.schema, moved, overwrite, txn, partFields,
       prev, prevProps)
   }
 
@@ -670,7 +655,7 @@ object IcebergInterop {
     * `df`'s files first) and [[commitExternal]] (which adopts files
     * that already exist elsewhere, the metadata-only CONVERT path).
     */
-  private def commitRefs(spark: SparkSession, fs: FileSystem, path: String,
+  private def commitRefs(fs: FileSystem, path: String,
       schema: StructType, moved: Seq[DataFileRef], overwrite: Boolean,
       txn: Option[(String, Long)], partFields: Seq[StructField],
       prev: Option[(Int, JValue)], prevProps: Map[String, String]): Long = {
@@ -680,7 +665,7 @@ object IcebergInterop {
     val baseId =
       if (overwrite) None
       else prev.map(p => (p._2 \ "current-snapshot-id").extract[Long])
-    val (listPath, newSeq, prevFormat) = writeSnapshotList(spark, fs, path,
+    val (listPath, newSeq, prevFormat) = writeSnapshotList(fs, path,
       schema, partFields, moved, snapshotId, prev.map(_._2), baseId)
 
     publishMetadata(fs, path, prev, schema, partFields,
@@ -694,20 +679,16 @@ object IcebergInterop {
   }
 
   /** Write one append/overwrite snapshot's manifest + manifest list:
-    * ONE distributed stats pass over `moved`, one new manifest stamped
+    * one new manifest over `moved` (stats from each ref), stamped
     * with the TABLE's format version, and a manifest list carrying
     * `baseSnapshotId`'s live records (None = fresh table / overwrite).
     * The base is a parameter because a branch write carries the BRANCH
     * head's list, not main's. Returns (listPath, newSeq, formatVersion).
     */
-  private def writeSnapshotList(spark: SparkSession, fs: FileSystem,
+  private def writeSnapshotList(fs: FileSystem,
       path: String, schema: StructType, partFields: Seq[StructField],
       moved: Seq[DataFileRef], snapshotId: Long, prevMeta: Option[JValue],
       baseSnapshotId: Option[Long]): (String, Long, Int) = {
-    // one distributed pass over the commit's files → the spec's
-    // column-stats maps (keyed by field-id), the skipping metadata
-    // real Iceberg planners prune on
-    val statsByFile = FileStats.fromFooters(spark, moved.map(_.path), schema)
     // sequence machinery: v1 tables stay seq-free; once a row-level
     // delete upgraded the table to format-version 2, every commit bumps
     // the sequence and stamps its manifest with it (the spec's ordering
@@ -718,8 +699,7 @@ object IcebergInterop {
       .getOrElse(1)
     val manifestPath = s"$path/metadata/${java.util.UUID.randomUUID()}-m0.avro"
     val entrySchema = manifestEntrySchema(partFields)
-    val entries = buildEntries(moved, snapshotId, schema, partFields,
-      statsByFile, entrySchema)
+    val entries = buildEntries(moved, snapshotId, schema, partFields, entrySchema)
     val schemaJ = schemaJson(schema)
     val (specId, specJson) = specStamp(prevMeta, partFields, schema)
     val manifestLen = writeAvro(fs, new Path(manifestPath), entrySchema,
@@ -884,8 +864,13 @@ object IcebergInterop {
       s"IcebergInterop.commitExternal: $path is already an Iceberg table " +
         "(metadata-only adoption targets a fresh location)")
     require(files.nonEmpty, "IcebergInterop.commitExternal: no data files")
-    commitRefs(spark, fs, path, schema, files, overwrite = false, txn = None,
-      partFields = Nil, prev = None, prevProps = Map.empty)
+    // the spec's column-stats maps (keyed by field-id), the skipping
+    // metadata real Iceberg planners prune on, from the adopted footers
+    val stats = FileStats.fromFooters(spark, files.map(_.path), schema)
+    commitRefs(fs, path, schema,
+      files.map(f => f.copy(stat = stats.get(FileStats.canon(f.path)))),
+      overwrite = false, txn = None, partFields = Nil, prev = None,
+      prevProps = Map.empty)
   }
 
   /** The current snapshot's live data files as (path, records, bytes),
@@ -1237,23 +1222,12 @@ object IcebergInterop {
       .filter(coalesce(where, lit(false)))
       .select(normalizedFilePath.as("file_path"),
         col("_metadata.row_index").as("pos"))
-    // the spec requires delete files sorted by (file_path, pos)
-    val stage = new Path(s"$path/metadata/delstage-${java.util.UUID.randomUUID()}")
-    matches.coalesce(1).sortWithinPartitions(col("file_path"), col("pos"))
-      .write.parquet(stage.toString)
-    val part = fs.listStatus(stage).map(_.getPath)
-      .find(_.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException("delete-file write produced no file"))
-    // row count from the staged file's own FOOTER — the old
-    // read-back count() was one extra Spark action per commit
-    val nDeleted = FileStats.fromFooters(spark, Seq(part.toString),
-        org.apache.spark.sql.types.StructType(Nil))
-      .headOption.flatMap(_._2.numRecords).getOrElse(0L)
-    if (nDeleted == 0L) { fs.delete(stage, true); return curId }
-    val delPath = s"$path/data/delete-${java.util.UUID.randomUUID()}.parquet"
-    fs.mkdirs(new Path(delPath).getParent)
-    require(fs.rename(part, new Path(delPath)), "delete-file rename failed")
-    fs.delete(stage, true)
+    // the spec requires delete files sorted by (file_path, pos); the
+    // row count comes from the staged file's own footer, not a count()
+    val (delPath, nDeleted) = stageDeleteFile(
+      matches.coalesce(1).sortWithinPartitions(col("file_path"), col("pos")),
+      path, "metadata/delstage-", "delete")
+    if (nDeleted == 0L) { fs.delete(new Path(delPath), false); return curId }
     commitDeleteFile(fs, path, version, meta, schema, partFields,
       listRecs, delPath, nDeleted, contentKind = 1, eqIds = Nil)
   }
@@ -1349,22 +1323,10 @@ object IcebergInterop {
     require(eqIds.nonEmpty, "IcebergInterop deleteEquality: no key columns")
     val curId = (meta \ "current-snapshot-id").extract[Long]
     // the spec wants delete files sorted; keys dedup for cleanliness
-    val stage = new Path(s"$path/metadata/eqstage-${java.util.UUID.randomUUID()}")
-    keys.distinct().coalesce(1)
-      .sortWithinPartitions(keys.schema.fieldNames.map(col): _*)
-      .write.parquet(stage.toString)
-    val part = fs.listStatus(stage).map(_.getPath)
-      .find(_.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException("eq-delete write produced no file"))
-    // footer row count — not a read-back count() action (see deletePositional)
-    val nKeys = FileStats.fromFooters(spark, Seq(part.toString),
-        org.apache.spark.sql.types.StructType(Nil))
-      .headOption.flatMap(_._2.numRecords).getOrElse(0L)
-    if (nKeys == 0L) { fs.delete(stage, true); return curId }
-    val delPath = s"$path/data/eqdelete-${java.util.UUID.randomUUID()}.parquet"
-    fs.mkdirs(new Path(delPath).getParent)
-    require(fs.rename(part, new Path(delPath)), "eq-delete rename failed")
-    fs.delete(stage, true)
+    val (delPath, nKeys) = stageDeleteFile(keys.distinct().coalesce(1)
+      .sortWithinPartitions(keys.schema.fieldNames.map(col): _*),
+      path, "metadata/eqstage-", "eqdelete")
+    if (nKeys == 0L) { fs.delete(new Path(delPath), false); return curId }
     val snap = (meta \ "snapshots").extract[List[JValue]]
       .find(s => (s \ "snapshot-id").extract[Long] == curId)
       .getOrElse(throw new IllegalStateException(s"snapshot $curId not in $path"))
@@ -1464,26 +1426,15 @@ object IcebergInterop {
         // per micro-batch (guide §1: cut actions, not just task work).
         // Zero-row staged files (an empty unpartitioned write still emits
         // one) are dropped before any manifest references them.
-        val moved0 = graft.JobLabel(spark, "iceberg.merge: stage appends") {
-          stageDataFiles(appendRows, path, partFields.map(_.name), fs)
-        }
-        val (movedEmpty, moved) = moved0.partition(_.records == 0L)
+        val (movedEmpty, moved) = stageDataFiles(appendRows, path,
+          partFields.map(_.name)).partition(_.records == 0L)
         movedEmpty.foreach(r => fs.delete(new Path(r.path), false))
         // sorted equality-delete parquet of the ON-key rows; row count
         // read back from its footer
-        val delStage = new Path(s"$path/metadata/eqstage-${java.util.UUID.randomUUID()}")
-        graft.JobLabel(spark, "iceberg.merge: stage eq-deletes") {
-          delKeys.coalesce(1).sortWithinPartitions(on.map(col): _*)
-            .write.parquet(delStage.toString)
-        }
-        val delPart = fs.listStatus(delStage).map(_.getPath)
-          .find(_.getName.endsWith(".parquet"))
-          .getOrElse(throw new IllegalStateException(
-            "merge eq-delete write produced no file"))
-        val nDel = FileStats.fromFooters(spark, Seq(delPart.toString),
-            StructType(Nil))
-          .headOption.flatMap(_._2.numRecords).getOrElse(0L)
-        if (nDel == 0) fs.delete(delStage, true)
+        val (delPath, nDel) = stageDeleteFile(
+          delKeys.coalesce(1).sortWithinPartitions(on.map(col): _*),
+          path, "metadata/eqstage-", "eqdelete")
+        if (nDel == 0) fs.delete(new Path(delPath), false)
         if (nDel == 0 && moved.isEmpty) return curId // full no-op
         val prevFormat = (meta \ "format-version").extract[Int]
         val fmt = if (nDel > 0) 2 else prevFormat
@@ -1499,7 +1450,6 @@ object IcebergInterop {
           new Path((snap \ "manifest-list").extract[String]))
         val fresh = scala.collection.mutable.ArrayBuffer[GenericRecord]()
         if (moved.nonEmpty) {
-          val statsByFile = FileStats.fromFooters(spark, moved.map(_.path), schema)
           val manifestPath = s"$path/metadata/${java.util.UUID.randomUUID()}-m0.avro"
           val entrySchema = manifestEntrySchema(partFields)
           val (specId, specJson) = specStamp(Some(meta), partFields, schema)
@@ -1508,16 +1458,11 @@ object IcebergInterop {
               "partition-spec" -> specJson,
               "partition-spec-id" -> specId,
               "format-version" -> fmt.toString),
-            buildEntries(moved, snapshotId, schema, partFields,
-              statsByFile, entrySchema))
+            buildEntries(moved, snapshotId, schema, partFields, entrySchema))
           fresh += listEntryRecord(manifestPath, len, snapshotId,
             content = 0, seq = newSeq)
         }
         if (nDel > 0) {
-          val delPath = s"$path/data/eqdelete-${java.util.UUID.randomUUID()}.parquet"
-          fs.mkdirs(new Path(delPath).getParent)
-          require(fs.rename(delPart, new Path(delPath)), "eq-delete rename failed")
-          fs.delete(delStage, true)
           val delLen = fs.getFileStatus(new Path(delPath)).getLen
           val dfSchema = DeleteManifestEntrySchema.getField("data_file").schema()
           val dfRec = new GenericData.Record(dfSchema)
@@ -1736,11 +1681,10 @@ object IcebergInterop {
 
   /** ADDED (status 1) manifest entries for freshly staged files: typed
     * partition record + the spec's column-stats maps (field-id keyed)
-    * from the commit's one distributed stats pass.
+    * from each file's footer stats.
     */
   private def buildEntries(moved: Seq[DataFileRef], snapshotId: Long,
       schema: StructType, partFields: Seq[StructField],
-      statsByFile: Map[String, FileStats.FileStat],
       entrySchema: org.apache.avro.Schema): Seq[GenericRecord] = {
     val dataFileSchema = entrySchema.getField("data_file").schema()
     def kvItemSchema(field: String) =
@@ -1766,7 +1710,7 @@ object IcebergInterop {
       d.put("record_count", f.records)
       d.put("file_size_in_bytes", f.bytes)
       d.put("block_size_in_bytes", 67108864L)
-      statsByFile.get(FileStats.canon(f.path)).foreach { st =>
+      f.stat.foreach { st =>
         val fields = schema.fields.zipWithIndex
         d.put("value_counts", kvList("value_counts",
           fields.map { case (_, i) => (i + 1) -> st.numRecords.getOrElse(0L) }.toSeq))
@@ -2075,13 +2019,10 @@ object IcebergInterop {
         case None =>
           frame.repartition(multi.size, partFields.map(f => col(f.name)): _*)
       }
-    val moved = stageDataFiles(packed, path, partFields.map(_.name), fs,
-      shape = false)
+    val moved = stageDataFiles(packed, path, partFields.map(_.name), shape = false)
     val snapshotId = math.abs(java.util.UUID.randomUUID().getMostSignificantBits)
-    val statsByFile = FileStats.fromFooters(spark, moved.map(_.path), schema)
     val entrySchema = manifestEntrySchema(partFields)
-    val newEntries = buildEntries(moved, snapshotId, schema, partFields,
-      statsByFile, entrySchema) ++
+    val newEntries = buildEntries(moved, snapshotId, schema, partFields, entrySchema) ++
       untouched.map { case (old, oldSeq) =>
         val e = new GenericData.Record(entrySchema)
         e.put("status", 0) // EXISTING
@@ -2627,10 +2568,10 @@ object IcebergInterop {
         df.schema.map(f => (f.name, f.dataType)),
       s"IcebergInterop branch append: schema must match the table " +
         s"(table ${schema.simpleString}, batch ${df.schema.simpleString})")
-    val moved = stageDataFiles(df, path, partFields.map(_.name), fs)
+    val moved = stageDataFiles(df, path, partFields.map(_.name))
     val snapshotId = math.abs(java.util.UUID.randomUUID().getMostSignificantBits)
     val now = System.currentTimeMillis()
-    val (listPath, newSeq, fmt) = writeSnapshotList(spark, fs, path, schema,
+    val (listPath, newSeq, fmt) = writeSnapshotList(fs, path, schema,
       partFields, moved, snapshotId, Some(meta), baseSnapshotId = Some(head))
     val snapshot = JObject(
       "snapshot-id" -> JLong(snapshotId),

@@ -295,8 +295,7 @@ object TableSink {
       key: String, precombine: String, partitionCols: Seq[String]): Unit = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Staging.fsFor(spark, path)
     val exists = fs.exists(new org.apache.hadoop.fs.Path(path))
     val w = Window.partitionBy((partitionCols :+ key).map(col): _*)
       .orderBy(col(precombine).desc, col("__src").desc)
@@ -415,8 +414,7 @@ object TableSink {
   def compact(
       spark: SparkSession, path: String,
       partitionCols: Seq[String], targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Staging.fsFor(spark, path)
     val dst = new org.apache.hadoop.fs.Path(path)
     val tmp = new org.apache.hadoop.fs.Path(path + ".compact-tmp")
     val bak = new org.apache.hadoop.fs.Path(path + ".compact-old")

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
+import Staging.fsFor
+
 /** Snapshot / time-travel table: a transaction log over the same
   * hive-partitioned parquet layout [[TableSink]] writes.
   *
@@ -293,6 +295,10 @@ object VersionedTable {
   private val LogDir = "_graft_log"
   private val StageDir = "_graft_stage"
 
+  /** The log and stage trees: never data of the table itself. */
+  private def internal(rel: String): Boolean =
+    rel.startsWith(LogDir) || rel.startsWith(StageDir)
+
   /** Reserved column marking tombstone rows inside MOR delta files
     * (Hudi's `_hoodie_is_deleted` shape). Never part of the logical
     * schema; merged reads drop keys whose collapse winner carries it.
@@ -395,9 +401,6 @@ object VersionedTable {
   private final case class BloomStat(m: Int, k: Int, dt: String, bitsB64: String)
 
   private implicit val formats: Formats = DefaultFormats
-
-  private def fsFor(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def commitPath(path: String, version: Long): Path =
     new Path(s"$path/$LogDir/v${"%020d".format(version)}.json")
@@ -1067,65 +1070,17 @@ object VersionedTable {
   }
 
   /** Stage `df` as immutable data files under `path` (hive layout) and
-    * return their table-relative paths. Files land via rename from a
-    * stage dir, so a crashed write leaves only unreferenced garbage —
-    * never a half-visible commit.
+    * return their table-relative paths ([[Staging]]: a crashed write
+    * leaves only unreferenced garbage, never a half-visible commit).
     */
   private def stage(spark: SparkSession, path: String, df: DataFrame,
-      partitionCols: Seq[String], allowEmpty: Boolean = false): Seq[String] = {
-    val fs = fsFor(spark, path)
-    val stagePath = new Path(s"$path/$StageDir/${java.util.UUID.randomUUID}")
-    df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(stagePath.toString)
-    collectStaged(fs, path, stagePath, allowEmpty)
-  }
-
-  /** Recursive parquet-file walk via plain listStatus — NOT
-    * listFiles(recursive), which materializes block locations per file
-    * (measured 3+ s over ~500 dirs). `skipInternal` skips the log and
-    * stage trees. Yields (status, root-relative path).
-    */
-  private def walkParquet(fs: FileSystem, root: Path, skipInternal: Boolean)(
-      f: (org.apache.hadoop.fs.FileStatus, String) => Unit): Unit = {
-    val rootQ = fs.makeQualified(root).toString
-    def go(dir: Path): Unit = fs.listStatus(dir).foreach { st =>
-      val rel = fs.makeQualified(st.getPath).toString.stripPrefix(rootQ + "/")
-      if (st.isDirectory) {
-        if (!skipInternal || (!rel.startsWith(LogDir) && !rel.startsWith(StageDir)))
-          go(st.getPath)
-      } else if (rel.endsWith(".parquet")) f(st, rel)
-    }
-    go(root)
-  }
-
-  /** Move the stage dir's data files into the table tree (preserving the
-    * hive subpaths) and return their table-relative paths.
-    */
-  private def collectStaged(fs: FileSystem, path: String, stagePath: Path,
-      allowEmpty: Boolean): Seq[String] = {
-    val pairs = scala.collection.mutable.ArrayBuffer[(Path, String)]()
-    walkParquet(fs, stagePath, skipInternal = false)((st, rel) =>
-      pairs += st.getPath -> rel)
-    // Create dirs and move concurrently: each FS op is ms-scale per-op
-    // latency (worse on an object store), and a wide hive layout stages
-    // hundreds of files — serial, this dominated partitioned commits.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(16, math.max(1, pairs.size)))
-    try {
-      pairs.map(p => new Path(s"$path/${p._2}").getParent).distinct.map(d =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = { fs.mkdirs(d); () }
-        })).foreach(_.get())
-      pairs.map { case (src, rel) =>
-        val dst = new Path(s"$path/$rel")
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit =
-            require(fs.rename(src, dst), s"stage: failed to move $src -> $dst")
-        })
-      }.foreach(_.get())
-    } finally pool.shutdown()
-    fs.delete(stagePath, true)
-    require(allowEmpty || pairs.nonEmpty, "stage: write produced no data files")
-    pairs.map(_._2).toSeq
+      partitionCols: Seq[String], allowEmpty: Boolean = false,
+      maxRecordsPerFile: Long = 0L): Seq[String] = {
+    val adds = Staging.write(df, path, s"$StageDir/", "vt: stage files",
+      org.apache.spark.sql.types.StructType(Nil), partitionCols,
+      maxRecordsPerFile)((rel, _) => rel).map(_.dest)
+    require(allowEmpty || adds.nonEmpty, "stage: write produced no data files")
+    adds
   }
 
   /** Every `checkpointEvery` commits, embed the full live-file manifest so
@@ -2608,23 +2563,13 @@ object VersionedTable {
     val shaped =
       if (partCols.isEmpty) df.coalesce(math.max(1, (bytes / targetFileBytes).toInt))
       else df.repartition(partCols.map(col): _*)
-    val adds = stageWithMaxRecords(spark, path, shaped, partCols,
-      (targetFileBytes / avgRow).max(1L))
+    val adds = stage(spark, path, shaped, partCols,
+      maxRecordsPerFile = (targetFileBytes / avgRow).max(1L))
     val c = publishWithRebase(fs, path, "optimize", adds, victims, txn = None,
       schemaOf = a => snapshotSchema(a), allowRebase = true,
       stats = collectStats(spark, path, adds, activeStatsCols(upTo)),
       blooms = collectBlooms(spark, path, adds, activeBloomBits(upTo)))
     c.version
-  }
-
-  private def stageWithMaxRecords(spark: SparkSession, path: String, df: DataFrame,
-      partitionCols: Seq[String], maxRecordsPerFile: Long): Seq[String] = {
-    val fs = fsFor(spark, path)
-    val stagePath = new Path(s"$path/$StageDir/${java.util.UUID.randomUUID}")
-    df.write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy(partitionCols: _*).parquet(stagePath.toString)
-    collectStaged(fs, path, stagePath, allowEmpty = false)
   }
 
   /** Physically delete data files that are not live in ANY retained
@@ -2658,7 +2603,7 @@ object VersionedTable {
     // the same retention-window bet).
     val now = System.currentTimeMillis()
     val orphans = scala.collection.mutable.ArrayBuffer[String]()
-    walkParquet(fs, new Path(path), skipInternal = true) { (st, rel) =>
+    Staging.walkParquet(fs, new Path(path), internal) { (st, rel) =>
       if (!everReferenced.contains(rel) &&
           now - st.getModificationTime > orphanMinAgeMs) {
         fs.delete(st.getPath, false)
@@ -2742,8 +2687,8 @@ object VersionedTable {
     val fs = fsFor(spark, path)
     require(commits(fs, path).isEmpty, s"already a versioned table: $path")
     val files = scala.collection.mutable.ArrayBuffer[String]()
-    // skipInternal: never adopt staging debris of crashed writes
-    walkParquet(fs, new Path(path), skipInternal = true)((_, rel) => files += rel)
+    // never adopt staging debris of crashed writes
+    Staging.walkParquet(fs, new Path(path), internal)((_, rel) => files += rel)
     require(files.nonEmpty, s"convert: no parquet files under $path")
     val schema = spark.read.option("basePath", path)
       .parquet(files.toSeq.map(f => s"$path/$f"): _*)

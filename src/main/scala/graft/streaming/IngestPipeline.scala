@@ -333,7 +333,8 @@ object IngestPipeline {
         graft.GraftSession.withMicroBatchDml(batch) {
           val b = batch.persist()
           // no emptiness probe: upsert's routing-pair collection already
-          // answers it (empty batch → no-op, no commit)
+          // answers it (empty batch → no-op; into a table with no commit
+          // yet, an empty delta commit)
           try {
             graft.sinks.HudiMor.upsert(b, path, recordKey = "event_id",
               precombine = "event_id", partitionBy = Seq("event_date"))

@@ -168,6 +168,21 @@ class DeletionVectorsSpec extends SparkSpec {
     assert(got == Map(2L -> 99.0, 4L -> 40.0, 5L -> 50.0, 6L -> 60.0))
   }
 
+  test("DELETE of rows a DV already removed publishes nothing; the change feed still reads") {
+    val path = tmp("dvcdf")
+    DeltaInterop.write(sample, path, partitionBy = Seq("cat"))          // v0
+    DeltaInterop.setTableProperties(spark, path,
+      Map("delta.enableChangeDataFeed" -> "true"))                      // v1
+    DeltaInterop.deleteDv(spark, path, col("id") === 2L)               // v2
+    // stats still cover id = 2, so the file is touched, but no live row matches
+    val r = DeltaInterop.delete(spark, path, col("id") === 2L)
+    assert(r.version == 2L && r.rewrittenFiles == 0, r)
+    assert(DeltaInterop.latestVersion(spark, path) == 2L)
+    val feed = DeltaInterop.readChangeFeed(spark, path, 0L, 2L)
+      .filter(col("_change_type") === "delete").select("id").as[Long].collect()
+    assert(feed.toSeq == Seq(2L))
+  }
+
   test("compact collapses DVs into clean parquet; conversion refuses until then") {
     val path = tmp("dvc")
     DeltaInterop.write(sample, path)

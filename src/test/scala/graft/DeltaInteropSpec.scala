@@ -329,16 +329,15 @@ class DeltaInteropSpec extends SparkSpec {
 
   test("readWhere skips files by stats and partitions, results unchanged") {
     val path = tmp("skip")
-    // range-partitioned by id → disjoint per-file min/max ranges; the
-    // deliberate clustering must survive the write, so the writer's
-    // default one-file-per-dir shaping is opted out of
+    // eight appends of disjoint id ranges → disjoint per-file min/max
+    // ranges (each append writes one file per partition dir)
     val df = ss.range(0, 1000)
       .withColumn("cat", when(col("id") % 2 === 0, "even").otherwise("odd"))
       .withColumn("v", col("id").cast("double"))
-    spark.conf.set("graft.write.shape", "false")
-    try DeltaInterop.write(df.repartitionByRange(8, col("id")), path,
-      partitionBy = Seq("cat"))
-    finally spark.conf.unset("graft.write.shape")
+    (0 until 8).foreach { i =>
+      DeltaInterop.write(df.filter(col("id") >= i * 125L && col("id") < (i + 1) * 125L),
+        path, partitionBy = Seq("cat"))
+    }
     val snap = DeltaInterop.snapshot(spark, path)
     val total = snap.adds.size
     assert(total >= 8, s"expected >=8 files, got $total")

@@ -28,13 +28,12 @@ class FunctionsSpec extends SparkSpec {
     }
   }
 
-  test("VecMinMaxAgg equals the exploded min/max route bit for bit") {
+  /** VecMinMaxAgg over `vecs.embedding` must equal the exploded
+    * per-dimension min/max route bit for bit.
+    */
+  private def assertVecMinMaxMatchesExploded(vecs: org.apache.spark.sql.DataFrame,
+      dim: Int): Unit = {
     import org.apache.spark.sql.GraftShim
-    val dim = 6
-    val vecs = Seq(
-      Array(1.5f, -2f, 0f, Float.MinValue, 7f, -0.5f),
-      Array(-3f, 4f, 0.25f, 100f, -7f, 0.5f),
-      Array(0f, 0.125f, -9f, 0f, 7.5f, 0f)).toDF("embedding")
     val exploded = vecs
       .select(posexplode(col("embedding")).as(Seq("i", "x")))
       .groupBy(col("i")).agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
@@ -49,6 +48,22 @@ class FunctionsSpec extends SparkSpec {
       assert(java.lang.Float.compare(buf(dim + i), exploded(i)._2) == 0,
         s"max mismatch at $i: ${buf(dim + i)} vs ${exploded(i)._2}")
     }
+  }
+
+  test("VecMinMaxAgg equals the exploded min/max route bit for bit") {
+    assertVecMinMaxMatchesExploded(Seq(
+      Array(1.5f, -2f, 0f, Float.MinValue, 7f, -0.5f),
+      Array(-3f, 4f, 0.25f, 100f, -7f, 0.5f),
+      Array(0f, 0.125f, -9f, 0f, 7.5f, 0f)).toDF("embedding"), dim = 6)
+  }
+
+  test("VecMinMaxAgg skips null slots like the exploded min/max route") {
+    // dimension 0 is all positive and dimension 1 all negative, so a
+    // null slot read as 0 would move the min of one and the max of the other
+    assertVecMinMaxMatchesExploded(Seq(
+      Seq(Some(1.5f), None, Some(3f)),
+      Seq(None, Some(-4f), Some(-1f)),
+      Seq(Some(2.5f), Some(-0.5f), None)).toDF("embedding"), dim = 3)
   }
 
   test("graft_cosine matches normalized HOF dot; zero vectors give 0") {

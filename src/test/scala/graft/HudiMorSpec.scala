@@ -435,7 +435,7 @@ class HudiMorSpec extends SparkSpec {
     assert(snap(path).size == 4)
   }
 
-  test("empty upsert batch is a no-op returning the latest instant; empty table refuses") {
+  test("empty upsert: no-op on a live table, an empty delta commit on an empty one") {
     val path = tmp("emptyup")
     val i1 = HudiMor.upsert(sample, path, "id", "ts", Seq("cat"))
     // emptiness rides the routing-pair probe the upsert runs anyway (the
@@ -445,12 +445,37 @@ class HudiMorSpec extends SparkSpec {
     assert(HudiInterop.completedInstants(spark, path).size == 1,
       "no empty commit may land")
     assert(snap(path).size == 4)
-    // an empty batch into an EMPTY table has no instant to report: refuse
+    // an empty batch into an EMPTY table completes an empty delta commit
+    // (Hudi's default for an empty write), and later batches build on it
     val fresh = tmp("emptyfresh")
-    val e = intercept[IllegalArgumentException] {
-      HudiMor.upsert(sample.filter(lit(false)), fresh, "id", "ts", Seq("cat"))
-    }
-    assert(e.getMessage.contains("empty batch into an empty table"))
+    val e = HudiMor.upsert(sample.filter(lit(false)), fresh, "id", "ts", Seq("cat"))
+    assert(HudiInterop.completedInstants(spark, fresh) == Seq(e))
+    val i2 = HudiMor.upsert(sample, fresh, "id", "ts", Seq("cat"))
+    assert(i2 > e)
+    assert(snap(fresh).size == 4)
+  }
+
+  test("a foreachBatch stream whose first micro-batch is empty keeps running") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val path = tmp("emptyfirst")
+    val in = MemoryStream[(Long, String, Double, Long)](spark)
+    val q = in.toDF().toDF("id", "cat", "v", "ts").writeStream
+      .option("checkpointLocation", tmp("emptyfirst-ckpt"))
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        HudiMor.upsert(batch, path, "id", "ts", Seq("cat"))
+        ()
+      }
+      .start()
+    try {
+      in.addData(Seq.empty[(Long, String, Double, Long)])
+      q.processAllAvailable()
+      in.addData(Seq((1L, "a", 10.0, 100L), (2L, "b", 20.0, 100L)))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(q.exception.isEmpty)
+    assert(HudiInterop.completedInstants(spark, path).size == 2)
+    assert(snap(path) == Map(1L -> 10.0, 2L -> 20.0))
   }
 
   test("asOf read ignores groups bootstrapped after asOf, even once they take log appends") {
